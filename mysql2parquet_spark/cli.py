@@ -1174,7 +1174,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from mysql2parquet_spark.compat import export, reference_type_projection
     from mysql2parquet_spark.io import read_jdbc, register_tables
-    from mysql2parquet_spark.session import get_spark
+    from mysql2parquet_spark.session import _running_session, get_spark
 
     # Session ownership: as a console process there is never an active
     # session — main() creates one and stops it on exit, exactly as
@@ -1185,9 +1185,7 @@ def main(argv: list[str] | None = None) -> int:
     # process-global). So: stop only what we started. This is also what
     # makes the CLI contract tests runnable in-process instead of one
     # ~12 s JVM boot per invocation (r15).
-    from pyspark.sql import SparkSession
-
-    _preexisting = SparkSession.getActiveSession()
+    _preexisting = _running_session()
     spark = get_spark("mysql2parquet-spark-cli", master=args.master)
     try:
         if args.stream_events:

@@ -50,6 +50,11 @@ def minhash_signature(shingle_arr: Column | str, num_hashes: int = 32) -> Column
     """MinHash signature: array of ``num_hashes`` ints, element j =
     min over shingles of hash_j(shingle).
 
+    The REFERENCE definition. The dedup operators build signatures with
+    ``operators.dedup.minhash_signature_relation``, which computes the
+    same values bit for bit (parity-tested) as codegen'd relational
+    operators; this per-row fold pins what those values are.
+
     Built as ONE fold over the shingle array (each shingle hashed with
     every hash function, running element-wise min via zip_with) — the
     naive `array(array_min(transform(...)) for each seed)` form embeds
@@ -57,18 +62,14 @@ def minhash_signature(shingle_arr: Column | str, num_hashes: int = 32) -> Column
     seed.
 
     Hash family: each 64-bit xxhash64(seed_j, shingle) is SPLIT into
-    its two 32-bit halves, yielding two independent full-width hash
-    functions per evaluation — num_hashes components cost num_hashes/2
-    hash calls (the r4 bench follow-up: dedup_minhash read high three
-    rounds running; this packing cut the signature fold ~27% on sf0.1,
-    docs/BENCH_NOTES.md). Unlike the rejected Kirsch-Mitzenmacher
+    its two 32-bit halves (high half first), yielding two independent
+    full-width hash functions per evaluation — num_hashes components
+    cost ceil(num_hashes/2) hash calls. Unlike a Kirsch-Mitzenmacher
     family (h1 + j·h2 — linearly dependent functions share argmins and
     planted-dup recall collapsed to ~0.5), the halves of one xxhash64
-    carry independent bits, and the planted-recall/estimator gates in
-    tests/test_tierc.py hold unchanged. Both halves are extracted with
+    carry independent bits. Both halves are extracted with
     shiftleft/shiftright sign-extension (not a raw long→int cast, which
-    throws under ANSI mode). Pure projection — scales linearly, no
-    shuffle.
+    throws under ANSI mode).
     """
     arr = _c(shingle_arr)
     int_max = 2147483647
@@ -97,32 +98,30 @@ def minhash_signature(shingle_arr: Column | str, num_hashes: int = 32) -> Column
     )
 
 
-def band_hashes(signature: Column | str, bands: int, rows_per_band: int) -> Column:
-    """LSH banding: split the signature into ``bands`` groups of
-    ``rows_per_band`` and hash each group → array<int> of band keys.
-    Two docs sharing ANY band key become a candidate pair.
+def band_hashes(signature: str, bands: int, rows_per_band: int) -> Column:
+    """LSH banding: split the signature column ``signature`` (a column
+    name) into ``bands`` groups of ``rows_per_band`` and hash each
+    group → array<int> of band keys. Two docs sharing ANY band key
+    become a candidate pair.
 
     Each band key is one multi-argument murmur3 ``hash(band, c0..ck)``
     over the group's signature components DIRECTLY — no intermediate
-    string form. The earlier ``hash(array_join(transform(cast string)))``
-    shape materialized num_hashes int→string casts plus bands string
-    concats per document before hashing; hashing the ints in place
-    halved the banding projection on the sf0.1 corpus (0.23 s → 0.11 s,
-    docs/BENCH_NOTES.md r6) and removes a per-doc allocation term that
-    scales with the corpus at 100 TB. Equal band groups still yield
-    equal keys; a cross-group 32-bit hash collision only adds a false
-    candidate pair, which the est_jaccard threshold filter already
-    discards (same property the string form had)."""
-    sig = _c(signature)
-    return F.array(
-        *[
-            F.hash(
-                F.lit(b),
-                *[sig[b * rows_per_band + i] for i in range(rows_per_band)],
-            )
-            for b in range(bands)
-        ]
+    string form, so no per-doc int→string casts or concats. Equal band
+    groups yield equal keys; a cross-group 32-bit hash collision only
+    adds a false candidate pair, which the est_jaccard threshold filter
+    discards. Built as one SQL expression string (one driver call, not
+    a column tree per component)."""
+    keys = ", ".join(
+        "hash({}, {})".format(
+            b,
+            ", ".join(
+                f"{signature}[{b * rows_per_band + i}]"
+                for i in range(rows_per_band)
+            ),
+        )
+        for b in range(bands)
     )
+    return F.expr(f"array({keys})")
 
 
 def simhash_long(token_arr: Column | str) -> Column:

@@ -8,7 +8,8 @@ Five strategies, all shuffle-disciplined for 100 TB:
 - fingerprint_dedup: content hash (md5) — one shuffle on a 32-char key
   regardless of document size; the standard first pass at corpus scale.
 - minhash_lsh_*: near-dup candidates via MinHash signatures + LSH banding.
-  Signatures are a pure projection (no shuffle); candidate generation
+  Signatures are one per-doc aggregate over exploded shingles (no extra
+  shuffle past the doc spread); candidate generation
   shuffles on (band_id, band_hash) — i.e. only colliding docs ever meet,
   never the O(n²) cross join.
 - simhash_dedup: 64-bit SimHash + banded Hamming blocking (4×16-bit
@@ -25,13 +26,12 @@ the row path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mysql2parquet_spark.functions.hashing import (
     band_hashes,
     hamming_long,
-    minhash_signature,
     shingles,
     simhash_chunk,
     simhash_long,
@@ -67,46 +67,52 @@ def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return exact_dedup(fingerprint(df, text_col), ["fp"], id_col).drop("fp")
 
 
-def _banded_signatures(
+def minhash_signature_relation(
     df: DataFrame,
     id_col: str,
     text_col: str,
     *,
     shingle_n: int,
     num_hashes: int,
-    bands: int,
 ) -> DataFrame:
-    """``(doc, sig, band_idx, band_key)`` rows — the banded-LSH
-    projection shared by the one-shot collision join and the persisted
-    band store. Plan notes (the r2/r6-tuned shape, kept verbatim):
+    """``(doc, sig)`` MinHash signatures, one row per document — the one
+    signature builder every MinHash face bands from. Equal bit for bit
+    to the reference fold ``minhash_signature(shingles(text, n), k)``
+    (parity-tested), but built from codegen'd relational operators:
 
-    - Spread raw docs across cores BEFORE the signature fold: the
-      fold's cost is per-token, not per-byte, so tying it to scan
-      partitioning (128 MB parquet slabs) serializes hours of hashing
-      onto few tasks. REPARTITION_BY_NUM (explicit count), because a
-      bare ``repartition(col)`` is happily coalesced back to one task
-      by AQE when the text shuffle is small.
-    - The second ``repartition("doc")`` is a materialization barrier:
-      without it Catalyst collapses the signature projection into the
-      band-hash projection and re-evaluates the expensive fold once
-      per band. The exchange moves only (id, 32 ints) per doc — far
-      cheaper than bands× recompute — and pre-distributes docs for
-      the band join.
-    """
-    n_spread = df.sparkSession.sparkContext.defaultParallelism
-    src = df.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("_txt")
-    ).repartition(n_spread, "doc")
-    sig = src.select(
-        "doc",
-        minhash_signature(shingles("_txt", shingle_n), num_hashes).alias("sig"),
-    ).repartition("doc")
-    return sig.select(
-        "doc",
-        "sig",
-        F.posexplode(
-            band_hashes("sig", bands, num_hashes // bands)
-        ).alias("band_idx", "band_key"),
+    - Raw ``(doc, text)`` spreads across cores first (cost is
+      per-token, scan partitioning per-byte). REPARTITION_BY_NUM,
+      because AQE coalesces a bare ``repartition(col)`` back to one
+      task on a small shuffle.
+    - One row per shingle start (``explode``) carries the
+      ``(k + 1) // 2`` seeded ``xxhash64`` values; a per-doc ``min`` of
+      each 32-bit half reuses the doc spread (no second exchange) and
+      is the barrier that keeps band keys from re-hashing per band.
+
+    ``sig`` carries ``num_hashes`` and ``shingle_n`` as column metadata,
+    checked from the schema by consumers of a pre-built relation.
+    ``id_col`` must be unique (the aggregate keys on it)."""
+    n_longs = (num_hashes + 1) // 2
+    halves = [
+        f"min(CAST(shiftright({x}, 32) AS INT))"
+        for j in range(n_longs)
+        for x in (f"_h{j}", f"shiftleft(_h{j}, 32)")
+    ][:num_hashes]
+    rows = (
+        df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_txt"))
+        .repartition(df.sparkSession.sparkContext.defaultParallelism, "doc")
+        .select("doc", tokens("_txt").alias("_t"))
+        .selectExpr(
+            "doc",
+            "_t",
+            f"explode(sequence(1, greatest(size(_t) - {shingle_n - 1}, 1))) AS _i",
+        )
+        .selectExpr("doc", f"array_join(slice(_t, _i, {shingle_n}), ' ') AS _s")
+        .selectExpr("doc", *[f"xxhash64({j}, _s) AS _h{j}" for j in range(n_longs)])
+    )
+    stamp = {"num_hashes": num_hashes, "shingle_n": shingle_n}
+    return rows.groupBy("doc").agg(
+        F.expr(f"array({', '.join(halves)})").alias("sig", metadata=stamp)
     )
 
 
@@ -118,38 +124,56 @@ def minhash_doc_signatures(
     shingle_n: int,
     num_hashes: int,
 ) -> DataFrame:
-    """Eager-pinned ``(doc, sig)`` MinHash signature relation — the
-    BAND-INDEPENDENT half of ``_banded_signatures`` (num_hashes =
-    bands × rows_per_band is fixed up front; only the band grouping
-    depends on the planner's pick), factored out so the D85
-    plan-driven face can materialize the expensive shingle+hash fold
-    ON A DRIVER THREAD while the D74b planner's bounded-metadata
-    collect runs on the main thread (guide §2.6 "overlap independent
-    jobs") and band it afterwards. Pinning (doc, sig) also writes
-    1 row/doc instead of the banded form's bands rows/doc."""
-    n_spread = df.sparkSession.sparkContext.defaultParallelism
-    src = df.select(
-        F.col(id_col).alias("doc"), F.col(text_col).alias("_txt")
-    ).repartition(n_spread, "doc")
+    """Eager-pinned ``minhash_signature_relation``: 1 row per doc,
+    for faces that band it on several join sides (no ReusedExchange
+    ever fires for them, see ``_pin``) or that build it on a driver
+    thread while a planner job runs on the main thread
+    (``dedup_minhash_planned``)."""
     return _pin(
-        src.select(
-            "doc",
-            minhash_signature(
-                shingles("_txt", shingle_n), num_hashes
-            ).alias("sig"),
-        ).repartition("doc")
+        minhash_signature_relation(
+            df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
+        )
     )
 
 
-def _sig_agreement(a_sig, b_sig, num_hashes: int):
+def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """``(doc, sig, band_idx, band_key)``: ``bands`` rows per doc — a
+    cheap projection each join side recomputes from the signatures."""
+    return sigs.select(
+        "doc",
+        "sig",
+        F.posexplode(band_hashes("sig", bands, rows_per_band)).alias(
+            "band_idx", "band_key"
+        ),
+    )
+
+
+def _check_signature_stamp(
+    sigs: DataFrame, *, num_hashes: int, shingle_n: int
+) -> None:
+    """Budget guard for a pre-built signature relation, read from the
+    ``sig`` column metadata: schema only, no job."""
+    meta = sigs.schema["sig"].metadata or {}
+    got = (meta.get("num_hashes"), meta.get("shingle_n"))
+    if got != (num_hashes, shingle_n):
+        raise ValueError(
+            f"signatures= is stamped (num_hashes, shingle_n)={got} but this "
+            f"call uses {(num_hashes, shingle_n)}: build it with "
+            "minhash_doc_signatures(...) and the same budget"
+        )
+
+
+def _sig_agreement(a_sig: str, b_sig: str, num_hashes: int) -> Column:
     """Estimated Jaccard: fraction of equal MinHash signature
-    components, computed inside the join projection so downstream
-    operators shuffle an 8-byte estimate, never two signatures."""
-    return F.aggregate(
-        F.zip_with(a_sig, b_sig, lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(float(num_hashes))
+    components (DOUBLE), computed inside the join projection so
+    downstream operators shuffle an 8-byte estimate, never two
+    signatures. One fold: an unrolled sum of ``num_hashes`` comparisons
+    measured about 1.7x slower in the collision join."""
+    return F.expr(
+        f"aggregate(zip_with({a_sig}, {b_sig}, "
+        "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x)"
+        f" / CAST({num_hashes} AS DOUBLE)"
+    )
 
 
 def _minhash_collisions(
@@ -167,13 +191,12 @@ def _minhash_collisions(
     distinct, so a pair colliding in k bands appears k times. The
     jaccard estimate (fraction of equal signature components) is
     computed HERE, inside the join projection, so downstream distincts
-    shuffle 8-byte estimates instead of two 32-int signatures (the
-    r2 verdict's biggest constant-factor lever on this operator).
+    shuffle 8-byte estimates instead of two 32-int signatures.
 
-    Plan shape: projection (shingles→signature→band keys) → explode
-    bands → self-join on (band_idx, band_key). The only shuffles are
-    keyed on hashes, so they distribute evenly even on skewed corpora —
-    never the O(n²) cross join.
+    Plan shape: pinned ``(doc, sig)`` signatures (1 row per doc) →
+    band keys → explode bands → self-join on (band_idx, band_key). The
+    only shuffles are keyed on hashes, so they distribute evenly even
+    on skewed corpora — never the O(n²) cross join.
 
     HOT-BAND CAP (opt-in): a pathologically popular band key
     (boilerplate — many identical or near-identical docs sharing a
@@ -187,48 +210,22 @@ def _minhash_collisions(
     (its estimate against the bucket's min-id reps can fall below the
     threshold even when the deeper-ranked pair is above it). Default is
     None (exact); pass a cap for boilerplate-heavy corpora at scale.
+
+    ``signatures=`` takes a pre-built ``minhash_doc_signatures``
+    relation (the ``dedup_minhash_planned`` overlap path); its stamp
+    must match ``num_hashes`` and ``shingle_n``.
     """
-    # Pinned: the banded projection feeds BOTH self-join sides (and the
-    # cap window), and no ReusedExchange ever fires for it (see _pin) —
-    # unpinned, the whole shingle+minhash fold ran twice (r14 measured:
-    # one banded pass is ~0.6 s at sf0.1, and every minhash face paid
-    # it per join side). With ``signatures=`` (a pre-pinned
-    # ``minhash_doc_signatures`` relation, the D85 overlap path) the
-    # fold is already materialized and banding is a cheap posexplode
-    # projection each side recomputes from the checkpoint.
-    if signatures is not None:
-        # Budget-contract guard (ADVICE r14): the pre-built signature
-        # length must equal THIS call's num_hashes, or band_hashes
-        # indexes past the array (NULL keys / ANSI error) and
-        # _sig_agreement divides by the wrong count — silently skewed
-        # est_jaccard. One bounded probe row (the D85 caller passes an
-        # eagerly pinned relation, so this reads one checkpoint row).
-        probe = (
-            signatures.select(F.size("sig").alias("_n"))
-            .limit(1)
-            .collect()  # bounded-metadata (<= 1 row, budget guard)
-        )
-        if probe and probe[0]["_n"] != num_hashes:
-            raise ValueError(
-                f"signatures= carries {probe[0]['_n']}-hash signatures "
-                f"but num_hashes={num_hashes} — the pre-built relation "
-                "must be built with the same hash budget "
-                "(minhash_doc_signatures(num_hashes=...))"
-            )
-        banded = signatures.select(
-            "doc",
-            "sig",
-            F.posexplode(
-                band_hashes("sig", bands, num_hashes // bands)
-            ).alias("band_idx", "band_key"),
+    # Pinned: the signatures feed both self-join sides (and the cap
+    # window), and no ReusedExchange ever fires for them (see _pin).
+    if signatures is None:
+        signatures = minhash_doc_signatures(
+            df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
         )
     else:
-        banded = _pin(
-            _banded_signatures(
-                df, id_col, text_col,
-                shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-            )
+        _check_signature_stamp(
+            signatures, num_hashes=num_hashes, shingle_n=shingle_n
         )
+    banded = _banded(signatures, bands, num_hashes // bands)
     if max_band_width is not None:
         bucket_w = Window.partitionBy("band_idx", "band_key").orderBy("doc")
         reps = (
@@ -240,7 +237,7 @@ def _minhash_collisions(
         reps = banded
     a = reps.alias("a")
     b = banded.alias("b")
-    est = _sig_agreement(F.col("a.sig"), F.col("b.sig"), num_hashes)
+    est = _sig_agreement("a.sig", "b.sig", num_hashes)
     return a.join(
         b,
         (F.col("a.band_idx") == F.col("b.band_idx"))
@@ -1077,10 +1074,12 @@ def minhash_band_store(
     is bands × (16 B keys + num_hashes × 4 B sig) per doc — KBs per
     thousand docs, orders of magnitude under the corpus itself. Append
     the accepted batch's rows after each run (same builder)."""
-    return _banded_signatures(
-        df, id_col, text_col,
-        shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-    ).select("band_idx", "band_key", "doc", "sig")
+    sigs = minhash_signature_relation(
+        df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
+    )
+    return _banded(sigs, bands, num_hashes // bands).select(
+        "band_idx", "band_key", "doc", "sig"
+    )
 
 
 def incremental_minhash_dedup(
@@ -1125,14 +1124,14 @@ def incremental_minhash_dedup(
     beyond the cap keeps its row — under-removal, never a false drop);
     default None (exact collision set).
     """
-    # Pinned: the batch's banded projection feeds the store probe AND
-    # both within-batch join sides — three recomputed signature folds
-    # without it (no ReusedExchange, see _pin).
-    banded = _pin(
-        _banded_signatures(
-            batch, id_col, text_col,
-            shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
-        )
+    # Pinned signatures: the batch's bands feed the store probe AND
+    # both within-batch join sides (no ReusedExchange, see _pin).
+    banded = _banded(
+        minhash_doc_signatures(
+            batch, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes
+        ),
+        bands,
+        num_hashes // bands,
     )
     s = store.select(
         F.col("band_idx").alias("s_idx"),
@@ -1148,7 +1147,7 @@ def incremental_minhash_dedup(
             .drop("_rn")
         )
     s = s.drop("s_doc")
-    cross_est = _sig_agreement(F.col("sig"), F.col("s_sig"), num_hashes)
+    cross_est = _sig_agreement("sig", "s_sig", num_hashes)
     cross = (
         banded.join(
             s,
@@ -1169,7 +1168,7 @@ def incremental_minhash_dedup(
         reps = banded
     a = reps.alias("a")
     b = banded.alias("b")
-    within_est = _sig_agreement(F.col("a.sig"), F.col("b.sig"), num_hashes)
+    within_est = _sig_agreement("a.sig", "b.sig", num_hashes)
     within = (
         a.join(
             b,

@@ -4827,12 +4827,11 @@ def text_vocab_composition(spark, sf_dir):
 )
 def dedup_minhash_planned(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
-    # Overlap (r14, guide §2.6): the 32-component signature relation is
+    # Overlap (guide §2.6): the 32-component signature relation is
     # plan-INDEPENDENT (num_hashes = bands x rows_per_band is the fixed
     # budget; only the band grouping uses the planner's pick), so its
-    # eager pin — the expensive shingle+hash fold — runs on a driver
-    # thread while the planner's bounded-metadata collect runs on the
-    # main thread. Values are bit-identical to the serial composition
+    # eager pin runs on a driver thread while the planner's
+    # bounded-metadata collect runs on the main thread. Values are bit-identical to the serial composition
     # (same signatures, banded after; pinned in tests/test_soft_lsh_plan
     # .py::test_signatures_path_matches_inline).
     from pyspark import InheritableThread

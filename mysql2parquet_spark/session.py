@@ -21,17 +21,38 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
 
+def _running_session() -> SparkSession | None:
+    """The session already running in this process, or None.
+
+    ``getActiveSession()`` alone is thread-local: a host that built its
+    session on another thread has none active on this one, yet
+    ``getOrCreate`` would still return its process-global default."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is None:
+        return None
+    return SparkSession.getActiveSession() or SparkSession._instantiatedSession
+
+
 def get_spark(
     app_name: str = "mysql2parquet_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+    """Build a SparkSession with engine defaults, or return the one
+    already running in this process UNCHANGED.
+
+    A running session belongs to whoever built it (a host application,
+    the test suite): ``getOrCreate`` would re-apply every modifiable
+    builder conf below to it, e.g. resetting its shuffle partitions.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster leave it None and let spark-submit supply it.
     """
+    running = _running_session()
+    if running is not None:
+        return running
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"

@@ -16,6 +16,57 @@ def spark():
     s.stop()
 
 
+# conf-map hash -> its spark.sql.* entries: reading every entry costs one
+# driver round trip each, the hash one in total, and tests rarely change
+# the confs, so each distinct state is read in full once.
+_SQL_CONFS_BY_HASH: dict[int, dict[str, str]] = {}
+
+
+def _sql_confs(session) -> dict[str, str]:
+    confs = session._jsparkSession.conf().getAllAsJava()
+    key = confs.hashCode()
+    if key not in _SQL_CONFS_BY_HASH:
+        _SQL_CONFS_BY_HASH[key] = {
+            k: v for k, v in dict(confs).items() if k.startswith("spark.sql.")
+        }
+    return _SQL_CONFS_BY_HASH[key]
+
+
+@pytest.fixture(autouse=True)
+def _no_session_conf_leaks():
+    """Fail any test that leaves the shared session's ``spark.sql.*``
+    confs changed: every later test would silently run under them.
+    Restores the confs first, so one leak does not cascade. A key a
+    test sets and then puts back to its default value is not a leak."""
+    from pyspark import SparkContext
+    from pyspark.errors import SparkNoSuchElementException
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    before = _sql_confs(session) if session is not None else None
+    yield
+    if before is None or SparkContext._active_spark_context is None:
+        return
+    after = _sql_confs(session)
+    if after is before:
+        return
+    leaks = {}
+    for k in after.keys() - before.keys():
+        session.conf.unset(k)
+        try:
+            default = session.conf.get(k)
+        except SparkNoSuchElementException:  # not a registered conf
+            default = None
+        if default != after[k]:
+            leaks[k] = (None, after[k])
+    for k, v in before.items():
+        if after.get(k) != v:
+            session.conf.set(k, v)
+            leaks[k] = (v, after.get(k))
+    if leaks:
+        pytest.fail(f"test left session confs changed (before, after): {leaks}")
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_TEST_DIR

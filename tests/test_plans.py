@@ -106,6 +106,28 @@ def test_minhash_pair_shuffles_carry_estimates_not_signatures(spark, sf_dir):
     assert "HashAggregate(keys=[id_a" not in p
 
 
+def test_minhash_signature_relation_is_codegen(spark, sf_dir):
+    """The signature relation every MinHash face bands from is plain
+    relational operators: no lambda functions (an interpreted
+    higher-order fold allocates arrays per shingle outside codegen),
+    and its per-doc min aggregate runs inside WholeStageCodegen."""
+    from mysql2parquet_spark.io import load_table
+    from mysql2parquet_spark.operators import dedup
+
+    sigs = dedup.minhash_signature_relation(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text",
+        shingle_n=3, num_hashes=32,
+    )
+    sigs.collect()  # AQE prints the final (codegen-marked) plan after a run
+    p = sigs._jdf.queryExecution().executedPlan().toString()
+    assert "lambda" not in p.lower(), p
+    final = p.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, p
+    aggs = [ln for ln in final.splitlines() if "HashAggregate(" in ln]
+    assert aggs, p
+    assert all("*(" in ln.split("HashAggregate(")[0] for ln in aggs), p
+
+
 def test_no_collect_in_operator_paths():
     """No operator/query module may materialize DATA to the driver —
     grep-level guard; .collect() belongs to tests and the driver only.
