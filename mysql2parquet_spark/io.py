@@ -50,11 +50,20 @@ def read_parquet(
     we read nanos as long (legacy conf, runtime-settable) and convert any
     long column named ``ts`` to a microsecond timestamp — the same
     ns→µs truncation DuckDB/Arrow apply, so oracles agree.
+
+    Without ``merge_schema`` the schema comes from ONE footer read on
+    the driver (``_footer_schema``), so building the DataFrame runs no
+    Spark job; the cases that helper declines go through Spark's own
+    inference, errors included.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    else:
+        schema = _footer_schema(spark, path)
+        if schema is not None:
+            reader = reader.schema(schema)
     df = reader.parquet(path)
     for f in df.schema.fields:
         if f.name == "ts" and f.dataType.simpleString() == "bigint":
@@ -76,6 +85,91 @@ def _ns_to_ntz(col: str):
         f"timestampadd(MICROSECOND, {col} DIV 1000, "
         f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
     )
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    footer through the driver JVM instead of a Spark job: the footer of
+    the file Spark's inference reads, converted by Spark's own
+    ``readSchemaFromFooter`` under the session's parquet confs.
+
+    Only a local single file, or a flat directory of non-empty data
+    files (hidden ``_``/``.`` entries skipped, as Spark lists them),
+    qualifies. Everything else returns None and stays with Spark's
+    inference: glob patterns, other filesystems, subdirectories
+    (hive partitions), summary files (Spark merges them with the data
+    file), empty entries, zero-byte files, unreadable footers, and a
+    session with ``spark.sql.parquet.mergeSchema=true``."""
+    if any(c in path for c in "*?[]{}") or (
+        spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true"
+    ):
+        return None
+    import json
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import StructType
+
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        fs = hpath.getFileSystem(hconf)
+        if fs.getScheme() != "file":
+            return None
+        first = _first_data_file(fs.makeQualified(hpath).toUri().getPath())
+        if first is None:
+            return None
+        fpath = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(first))
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            hconf,
+            fpath,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+        )
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(fpath, meta),
+            parquet.ParquetToSparkSchemaConverter(state.conf()),
+        )
+    except Py4JJavaError:
+        return None
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter: entries its file index never reads as
+    data (``_x=y`` partition directories stay visible)."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _first_data_file(local: str) -> str | None:
+    """The data file Spark's non-merging inference reads under ``local``
+    (a file, or the first visible file of a flat directory by name), or
+    None where that choice is not a plain one — an unlistable directory
+    or a file gone mid-listing included."""
+    try:
+        if os.path.isfile(local):
+            ok = not _hidden(os.path.basename(local)) and os.path.getsize(local) > 0
+            return local if ok else None
+        if not os.path.isdir(local):
+            return None
+        names = []
+        with os.scandir(local) as entries:
+            for e in entries:
+                if e.name.startswith(("_metadata", "_common_metadata")):
+                    return None
+                if _hidden(e.name):
+                    continue
+                if not e.is_file() or e.stat().st_size == 0:
+                    return None
+                names.append(e.name)
+    except OSError:
+        return None
+    return os.path.join(local, min(names)) if names else None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -112,7 +206,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             # to register, skip quietly
             continue
         # Entries WITH data are read without a catch: a corrupt footer
-        # raises AnalysisException too, and swallowing it here would
+        # raises from the read itself, and swallowing it here would
         # surface as a misleading TABLE_OR_VIEW_NOT_FOUND when the query
         # references the table — the parquet error itself must propagate.
         out[name] = read_parquet(spark, path)
@@ -121,14 +215,15 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def _has_data_files(path: str) -> bool:
     """True if ``path`` is a non-empty file or a directory containing at
-    least one non-empty, non-hidden data file (``_SUCCESS``/dotfiles
-    don't count) — the precondition for attempting a parquet read."""
+    least one non-empty data file that Spark's listing keeps (``_hidden``:
+    ``_SUCCESS``/dotfiles don't count) — the precondition for attempting
+    a parquet read."""
     if os.path.isfile(path):
         return os.path.getsize(path) > 0
     for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
         for f in filenames:
-            if f.startswith((".", "_")):
+            if _hidden(f):
                 continue
             if os.path.getsize(os.path.join(dirpath, f)) > 0:
                 return True
@@ -420,7 +515,6 @@ def write_parquet(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     single_file: bool = False,
-    compression: str = "snappy",
 ) -> None:
     """Parquet sink (reference A7, main.go:165-203).
 
@@ -430,6 +524,10 @@ def write_parquet(
     the reference's one local file (main.go:165). Spark only writes
     directories, so the part-file is moved out of a temp dir afterward;
     local-filesystem compat exports only, never the scale path.
+
+    No writer here names a codec: the session's
+    ``spark.sql.parquet.compression.codec`` decides (zstd under
+    ``get_spark``, a host session's own codec otherwise).
     """
     if single_file:
         if partition_by:
@@ -453,12 +551,7 @@ def write_parquet(
 
         tmp = path + "._single_tmp"
         try:
-            (
-                df.coalesce(1)
-                .write.mode("overwrite")
-                .option("compression", compression)
-                .parquet(tmp)
-            )
+            df.coalesce(1).write.mode("overwrite").parquet(tmp)
             parts = glob.glob(os.path.join(tmp, "part-*.parquet"))
             if not parts:
                 raise ValueError(
@@ -474,7 +567,7 @@ def write_parquet(
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
         return
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -487,7 +580,6 @@ def write_clustered(
     cluster_by: str | list[str],
     n_files: int | None = None,
     mode: str = "overwrite",
-    compression: str = "snappy",
 ) -> None:
     """Range-clustered parquet layout (``CLUSTER BY`` for a file lake):
     ``repartitionByRange`` on the cluster keys + ``sortWithinPartitions``
@@ -510,7 +602,7 @@ def write_clustered(
         else df.repartitionByRange(*cols)
     )
     out = out.sortWithinPartitions(*cols)
-    out.write.mode(mode).option("compression", compression).parquet(path)
+    out.write.mode(mode).parquet(path)
 
 
 def _zorder_numeric(df: DataFrame, col: str):
@@ -540,7 +632,6 @@ def write_zordered(
     n_files: int | None = None,
     bits: int = 16,
     mode: str = "error",
-    compression: str = "snappy",
 ) -> None:
     """Multi-column clustered layout via a Z-order (Morton) key: scale
     each cluster column to a ``bits``-bit integer against its observed
@@ -608,7 +699,6 @@ def write_zordered(
         out.sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode(mode)
-        .option("compression", compression)
         .parquet(path)
     )
 
@@ -622,7 +712,6 @@ def write_bucketed(
     sort_by: str | list[str] | None = None,
     path: str | None = None,
     mode: str = "overwrite",
-    compression: str = "snappy",
 ) -> None:
     """Hash-bucketed parquet table — the co-located-join layout.
 
@@ -655,12 +744,7 @@ def write_bucketed(
     missing = [k for k in keys if k not in df.columns]
     if missing:
         raise ValueError(f"bucket columns not in DataFrame: {missing}")
-    w = (
-        df.write.mode(mode)
-        .format("parquet")
-        .option("compression", compression)
-        .bucketBy(num_buckets, *keys)
-    )
+    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *keys)
     if sort_by is not None:
         sorts = [sort_by] if isinstance(sort_by, str) else list(sort_by)
         w = w.sortBy(*sorts)
@@ -675,7 +759,6 @@ def compact_parquet(
     out_path: str,
     *,
     target_file_mb: int = 128,
-    compression: str = "snappy",
 ) -> int:
     """Small-file compaction (lake-maintenance OPTIMIZE): rewrite a
     parquet directory into ~``target_file_mb`` files. Returns the file
@@ -700,7 +783,6 @@ def compact_parquet(
         read_parquet(spark, path)
         .repartition(int(n_files))
         .write.mode("error")
-        .option("compression", compression)
         .parquet(out_path)
     )
     return int(n_files)

@@ -125,8 +125,8 @@ def minhash_doc_signatures(
     num_hashes: int,
 ) -> DataFrame:
     """Eager-pinned ``minhash_signature_relation``: 1 row per doc,
-    for faces that band it on several join sides (no ReusedExchange
-    ever fires for them, see ``_pin``) or that build it on a driver
+    for faces that band it on several join sides (each side would
+    rerun the signature aggregate, see ``_pin``) or that build it on a driver
     thread while a planner job runs on the main thread
     (``dedup_minhash_planned``)."""
     return _pin(
@@ -216,7 +216,7 @@ def _minhash_collisions(
     must match ``num_hashes`` and ``shingle_n``.
     """
     # Pinned: the signatures feed both self-join sides (and the cap
-    # window), and no ReusedExchange ever fires for them (see _pin).
+    # window), and each would rerun the signature aggregate (see _pin).
     if signatures is None:
         signatures = minhash_doc_signatures(
             df, id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes

@@ -96,7 +96,8 @@ def curate_with_classifier(
     # 4×SF/8c (saturated) min 2.35→2.19 s — the r14 "redundant-but-
     # parallel wins" note applied to pinning the MODEL relations (many
     # small serial checkpoints), not these two corpus-per-doc
-    # relations (one checkpoint each, constant-width rows).
+    # relations (one checkpoint each; ``deduped`` holds the full
+    # document text, see pin_shared).
     deduped = pin_shared(fingerprint_dedup(docs, text_col, id_col))
     scored = pin_shared(
         nb_classifier_score(
@@ -235,7 +236,8 @@ def curate_with_lm(
     # 64-Exchange-ref plan. lm3_score's MODEL relations (bi/uni) stay
     # unpinned — pinning those was the measured r14 regression (many
     # small serial checkpoint jobs); these two are one checkpoint each
-    # over constant-width per-doc rows. Interleaved A/B min-of-5
+    # over per-doc rows, ``deduped``'s with the full text (see
+    # pin_shared). Interleaved A/B min-of-5
     # (plans/r15/curate_pin_probes.md): sf0.1/32c none→both median
     # 2.97→2.30 s (win on every paired rep), 4×SF/8c (saturated)
     # 4.68→3.92 s median.

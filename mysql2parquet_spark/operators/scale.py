@@ -523,17 +523,22 @@ def fan_out(df, key=None):
 def pin_shared(df: DataFrame) -> DataFrame:
     """Materialize a shared intermediate ONCE (eager localCheckpoint).
 
-    Catalyst never emits a ReusedExchange for this engine's shared
-    subtrees: the shingle/minhash/tokenize projections are higher-order
-    functions whose lambda-variable exprIds defeat plan
-    canonicalization equality (the r7 `_gram_index` finding, verified
-    again r14 — zero ReusedExchange nodes across every dedup/tfidf/mad
-    plan), so a relation consumed by k branches is recomputed k times,
-    including its per-token hash folds. Pinning trades one eager
-    materialization of a constant-width relation (ids +
-    hashes/positions/counts, never raw text) for k−1 recomputed
+    A relation consumed by k branches of one plan is otherwise rebuilt
+    k times. Exchange reuse does not prevent that: it shares a
+    shuffle's output, not the operators above it. The MinHash signature
+    relation shows it: unpinned, the two band-join sides reuse the
+    ``(doc, text)`` spread exchange (a ReusedExchange in the final AQE
+    plan) but each runs the signature aggregate, hashing every shingle
+    twice (sf0.1 documents, 4 cores, best of 3: 0.83 s unpinned, 0.68 s
+    pinned). Pinning trades one eager materialization for k−1 rebuilt
     passes. Use ONLY where the plan shows ≥2 consumers of an expensive
     build; single-consumer relations stay lazy.
+
+    A pin holds whatever rows the caller passes. The MinHash, planner
+    and model pins are narrow (ids plus signatures, counts or weights),
+    but the three curate pipelines (``operators/pipeline.py``) pin
+    ``fingerprint_dedup(docs)``, full document text included: their
+    checkpoint blocks are about the size of the deduplicated corpus.
 
     ``persist()`` would be wrong here: cache lookup is by
     analyzed-plan equality, so a later identical query in the same
