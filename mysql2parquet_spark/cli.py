@@ -276,6 +276,18 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _first_line(e: BaseException) -> str:
+    """First line of an exception's message: the one-line CLI error
+    instead of a Python/Java traceback."""
+    text = str(e).strip()
+    return text.splitlines()[0] if text else repr(e)
+
+
+def _fail(kind: str, e: BaseException) -> int:
+    print(f"{kind} error: {_first_line(e)}", file=sys.stderr)
+    return 2
+
+
 def _split_session_prelude(query: str) -> tuple[str | None, str]:
     """Split the reference's documented `SET ...; SET ...; SELECT ...`
     multi-statement form (main.go:41-47): leading SET statements become
@@ -313,9 +325,7 @@ def _run_audit(df, args, spark) -> int | None:
         # one row per RULE, never per data row — bounded-metadata
         bad = report.filter(report.violations > 0).collect()  # bounded-metadata
     except Exception as e:
-        msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-        print(f"audit error: {msg}", file=sys.stderr)
-        return 2
+        return _fail("audit", e)
     if bad:
         for r in bad:
             print(f"audit FAILED: {r.rule}: {r.violations} violations", file=sys.stderr)
@@ -426,9 +436,7 @@ def _write_sidecars(spark, plan, read_path: str, out_base: str) -> int | None:
                 "overwrite"
             ).parquet(out_base + "_cat")
     except Exception as e:
-        msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-        print(f"sketch error: {msg}", file=sys.stderr)
-        return 2
+        return _fail("sketch", e)
     return None
 
 
@@ -662,7 +670,7 @@ def _run_stream_fold(spark, args, part_cols: list[str] | None = None) -> int:
         # declared schema, and the deltas themselves are the contract.
         schema = spark.read.parquet(args.stream_events).schema
     except Exception as e:
-        msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
+        msg = _first_line(e)
         print(
             f"stream error: no readable delta files under "
             f"{args.stream_events}: {msg}",
@@ -732,9 +740,7 @@ def _run_stream_fold(spark, args, part_cols: list[str] | None = None) -> int:
     try:
         q.processAllAvailable()
     except Exception as e:
-        msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-        print(f"stream error: {msg}", file=sys.stderr)
-        return 2
+        return _fail("stream", e)
     finally:
         q.stop()
     if args.keep_versions is not None:
@@ -1207,15 +1213,16 @@ def main(argv: list[str] | None = None) -> int:
                     include_old=args.diff_include_old,
                 )
             except Exception as e:
-                msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-                print(f"diff error: {msg}", file=sys.stderr)
-                return 2
+                return _fail("diff", e)
             if args.audit_rules:
                 # referential rules resolve parents via spark.table();
                 # register --tables-dir views first (the main export path
                 # does this as its source step, the diff path must too)
                 if args.tables_dir:
-                    register_tables(spark, args.tables_dir)
+                    try:
+                        register_tables(spark, args.tables_dir)
+                    except Exception as e:  # corrupt table file, ...
+                        return _fail("tables", e)
                 rc = _run_audit(diff, args, spark)
                 if rc is not None:
                     return rc
@@ -1228,13 +1235,14 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
         if args.tables_dir:
-            register_tables(spark, args.tables_dir)
+            try:
+                register_tables(spark, args.tables_dir)
+            except Exception as e:  # corrupt table file, ...
+                return _fail("tables", e)
             try:
                 df = spark.sql(args.query)
             except Exception as e:  # clean one-line SQL errors, not tracebacks
-                msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-                print(f"query error: {msg}", file=sys.stderr)
-                return 2
+                return _fail("query", e)
         else:
             session_init, query = _split_session_prelude(args.query)
             url = f"jdbc:mysql://{args.host}:{args.port}/{args.database}"
@@ -1280,9 +1288,7 @@ def main(argv: list[str] | None = None) -> int:
                         order_col=args.order_column,
                     )
             except Exception as e:  # missing snapshot, bad key column, ...
-                msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-                print(f"merge error: {msg}", file=sys.stderr)
-                return 2
+                return _fail("merge", e)
         if args.snapshot_root:
             # Versioned-snapshot mode: one command for the whole
             # lifecycle — first run bootstraps v=0 from the query result;
@@ -1410,9 +1416,7 @@ def main(argv: list[str] | None = None) -> int:
                             file=sys.stderr,
                         )
             except Exception as e:
-                msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-                print(f"snapshot error: {msg}", file=sys.stderr)
-                return 2
+                return _fail("snapshot", e)
             print(path)
             return 0
         if args.scd2_history:
@@ -1433,9 +1437,7 @@ def main(argv: list[str] | None = None) -> int:
                     ),
                 )
             except Exception as e:
-                msg = str(e).strip().splitlines()[0] if str(e).strip() else repr(e)
-                print(f"scd2 error: {msg}", file=sys.stderr)
-                return 2
+                return _fail("scd2", e)
         if args.sidecar_plan:
             # fail BEFORE the (possibly hours-long) export: unknown
             # column or a type a family cannot digest must not cost a

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mysql2parquet_spark.functions.money import cents, exact_sum, mul
 from mysql2parquet_spark.io import load_table, register_tables
 from mysql2parquet_spark.queries import register
 
@@ -24,11 +25,15 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def dec(col) -> F.Column:
-    """Money column → exact decimal. Summing decimals is order-independent
-    (unlike double sums, whose value drifts with shuffle order), so
-    aggregates are bit-reproducible across engines AND across cluster
-    sizes — at 100 TB the same query returns the same cents every run.
-    The final cast back to double is exact (≤15 significant digits)."""
+    """Money column → exact ``DECIMAL(18,2)``. Summing decimals is
+    order-independent (unlike double sums, whose value drifts with
+    shuffle order), so aggregates are bit-reproducible across engines
+    and cluster sizes. The final cast back to double is exact (≤15
+    significant digits). The pricing-summary sums (``tpch_q1``,
+    ``agg_group``) compute the same ``DECIMAL(18,2)`` values on BIGINT
+    through ``functions/money.py`` (exact up to 2^42 rows per group and
+    a per-row value below 2^63 units of the sum's scale); the other
+    money sums still cast every row here."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("decimal(18,2)")
 
@@ -281,16 +286,12 @@ def join_multiway(spark, sf_dir):
 # B12-B15 — aggregation
 # --------------------------------------------------------------------------
 
-@register(
-    "agg_group",
-    """
+PRICING_SUMMARY_SQL = """
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_base_price,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-             AS sum_disc_price,
+                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
            CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
                     * (1 - CAST(l_discount AS DECIMAL(18,2)))
                     * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE) AS sum_charge,
@@ -304,30 +305,66 @@ def join_multiway(spark, sf_dir):
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
-    """,
+    """
+
+
+def pricing_summary(spark, sf_dir):
+    """TPC-H Q1 pricing summary on the fixed-point money kernel. The
+    projections under the aggregate (one codegen stage) compute every
+    value once: the ``DECIMAL(18,2)`` cents of the four money columns,
+    then the scale-4 discounted price and the scale-6 charge as guarded
+    BIGINT products. The aggregate keeps only BIGINT limb sums and the
+    count; each sum recombines to the exact decimal the oracle computes,
+    so the doubles (and the averages: exact sum / exact count, one
+    division) are bit-identical at any partial-aggregation order or
+    cluster size."""
+    keys = ["l_returnflag", "l_linestatus"]
+    li = T(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
+    )
+    fixed = li.selectExpr(
+        *keys,
+        f"{cents('l_quantity')} AS _q",
+        f"{cents('l_extendedprice')} AS _p",
+        f"{cents('l_discount')} AS _d",
+        f"{cents('l_tax')} AS _t",
+    )
+    fixed = fixed.selectExpr(
+        *keys, "_q", "_p", "_d", "_t", f"{mul('_p', '100 - _d')} AS _dp"
+    )
+    fixed = fixed.selectExpr(
+        *keys, "_q", "_p", "_d", "_dp", f"{mul('_dp', '100 + _t')} AS _ch"
+    )
+    sums = [("_q", 2, "sum_qty"), ("_p", 2, "sum_base_price"),
+            ("_dp", 4, "sum_disc_price"), ("_ch", 6, "sum_charge"),
+            ("_d", 2, "_sd")]
+    g = fixed.groupBy(*keys).agg(
+        *[F.expr(f"CAST({exact_sum(c, s)} AS DOUBLE)").alias(n) for c, s, n in sums],
+        F.count("*").alias("count_order"),
+    )
+    n = F.col("count_order")
+    return g.select(
+        *keys,
+        "sum_qty",
+        "sum_base_price",
+        "sum_disc_price",
+        "sum_charge",
+        F.round(F.col("sum_qty") / n, 2).alias("avg_qty"),
+        F.round(F.col("sum_base_price") / n, 2).alias("avg_price"),
+        F.round(F.col("_sd") / n, 2).alias("avg_disc"),
+        "count_order",
+    )
+
+
+register(
+    "agg_group",
+    PRICING_SUMMARY_SQL,
     "B12 flagship (TPC-H Q1 shape): hash aggregation with partial "
     "(map-side) combine — the shuffle carries only |groups| rows per "
-    "task. Money sums in exact decimal: order-independent, so results "
-    "are bit-identical at any cluster size (double sums are not).",
-)
-def agg_group(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    disc = dec("l_extendedprice") * (1 - dec("l_discount"))
-    cnt = F.count("*")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity").alias("sum_qty"),
-            dsum("l_extendedprice").alias("sum_base_price"),
-            F.sum(disc).cast("double").alias("sum_disc_price"),
-            F.sum(disc * (1 + dec("l_tax"))).cast("double").alias("sum_charge"),
-            F.round(dsum("l_quantity") / cnt, 2).alias("avg_qty"),
-            F.round(dsum("l_extendedprice") / cnt, 2).alias("avg_price"),
-            F.round(dsum("l_discount") / cnt, 2).alias("avg_disc"),
-            cnt.alias("count_order"),
-        )
-    )
+    "task. Money sums exact (DECIMAL(18,2) semantics on BIGINT limbs): "
+    "order-independent, so results are bit-identical at any cluster size "
+    "(double sums are not).",
+)(pricing_summary)
 
 
 @register(

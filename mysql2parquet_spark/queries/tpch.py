@@ -5,9 +5,11 @@ revenue aggregation, grouped top-k. The reference delegates all of these
 wholesale to MySQL (main.go:106); here they are Catalyst plans with
 broadcast dims and decimal-exact money math.
 
-Revenue = sum(l_extendedprice * (1 - l_discount)) in DECIMAL(18,2)
-arithmetic — order-independent, so top-k ties are engine-stable and the
-tie-break key makes output fully deterministic.
+Money sums have DECIMAL(18,2) semantics — order-independent, so top-k
+ties are engine-stable and the tie-break key makes output fully
+deterministic. ``tpch_q1`` computes them through ``functions/money.py``
+(exact BIGINT limb sums of the same cents); revenue = sum(l_extendedprice
+* (1 - l_discount)) elsewhere still casts each row with ``tierb.dec``.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from pyspark.sql import functions as F
 
 from mysql2parquet_spark.io import load_table
 from mysql2parquet_spark.queries import register
-from mysql2parquet_spark.queries.tierb import dec
+from mysql2parquet_spark.queries.tierb import PRICING_SUMMARY_SQL, dec, pricing_summary
 
 
 def T(spark, sf_dir, name):
@@ -152,65 +154,16 @@ def tpch_q6(spark, sf_dir):
     )
 
 
-@register(
+register(
     "tpch_q1",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                    * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE) AS sum_charge,
-           ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 2) AS avg_qty,
-           ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 2) AS avg_price,
-           ROUND(CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 2) AS avg_disc,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
+    PRICING_SUMMARY_SQL,
     "TPC-H Q1 (exact): the canonical pricing-summary scan-aggregate — 8 "
     "aggregates over 6 groups, one shuffle of 6 rows after map-side "
-    "partials. All money math in DECIMAL(18,2) so the sums are "
-    "order-independent; averages as exact-decimal-sum / exact-count in "
-    "one double division (deterministic on both engines).",
-)
-def tpch_q1(spark, sf_dir):
-    """Pricing summary. Sums are decimal-exact (associative under any
-    partial-aggregation order, so a 1000-executor partial+final plan
-    matches single-node bit-for-bit); only the final division and the
-    declared output cast are floating-point."""
-    li = T(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    qty, price, disc, tax = (
-        dec("l_quantity"), dec("l_extendedprice"), dec("l_discount"), dec("l_tax")
-    )
-    g = li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(qty).alias("_sq"),
-        F.sum(price).alias("_sp"),
-        F.sum(price * (1 - disc)).cast("double").alias("sum_disc_price"),
-        F.sum(price * (1 - disc) * (1 + tax)).cast("double").alias("sum_charge"),
-        F.sum(disc).alias("_sd"),
-        F.count("*").alias("count_order"),
-    )
-    return g.select(
-        "l_returnflag",
-        "l_linestatus",
-        F.col("_sq").cast("double").alias("sum_qty"),
-        F.col("_sp").cast("double").alias("sum_base_price"),
-        "sum_disc_price",
-        "sum_charge",
-        F.round(F.col("_sq").cast("double") / F.col("count_order"), 2).alias("avg_qty"),
-        F.round(F.col("_sp").cast("double") / F.col("count_order"), 2).alias("avg_price"),
-        F.round(F.col("_sd").cast("double") / F.col("count_order"), 2).alias("avg_disc"),
-        "count_order",
-    )
+    "partials. Money sums have DECIMAL(18,2) semantics on BIGINT limb "
+    "sums (functions/money.py), so they are order-independent; averages "
+    "as exact-decimal-sum / exact-count in one double division "
+    "(deterministic on both engines).",
+)(pricing_summary)
 
 
 @register(

@@ -252,6 +252,48 @@ def test_missing_tables_dir_clean_error(tmp_path):
     assert "FileNotFoundError" not in rc.stderr
 
 
+def test_corrupt_table_file_clean_error(tmp_path, spark):
+    """A corrupt ``*.parquet`` under --tables-dir fails with one stderr
+    line and rc=2 on the export path and on the diff+audit path, not a
+    Py4JJavaError traceback with rc=1."""
+    import json
+
+    from mysql2parquet_spark.io import publish_snapshot
+
+    tables = tmp_path / "t"
+    tables.mkdir()
+    (tables / "bad.parquet").write_bytes(b"not a parquet file")
+    r = _cli(
+        [
+            "--tables-dir", str(tables),
+            "--query", "SELECT 1 AS one",
+            "--parquet", str(tmp_path / "o"),
+        ]
+    )
+    assert r.returncode == 2, (r.returncode, r.stderr[-2000:])
+    assert r.stderr.startswith("tables error:"), r.stderr[-2000:]
+    assert len(r.stderr.strip().splitlines()) == 1, r.stderr[-2000:]
+
+    root = str(tmp_path / "snaps")
+    for v in ("a", "b"):
+        publish_snapshot(spark.createDataFrame([(1, v)], "k bigint, v string"), root)
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps([{"type": "not_null", "cols": ["k"]}]))
+    r = _cli(
+        [
+            "--snapshot-root", root,
+            "--merge-keys", "k",
+            "--diff-versions", "0", "1",
+            "--parquet", str(tmp_path / "d"),
+            "--audit-rules", str(rules),
+            "--tables-dir", str(tables),
+        ]
+    )
+    assert r.returncode == 2, (r.returncode, r.stderr[-2000:])
+    assert r.stderr.startswith("tables error:"), r.stderr[-2000:]
+    assert len(r.stderr.strip().splitlines()) == 1, r.stderr[-2000:]
+
+
 def test_stray_entries_in_tables_dir_skipped(tmp_path, spark):
     """Unreadable *.parquet entries (empty dir) and non-identifier stems
     must be skipped, not abort registration."""

@@ -4,6 +4,8 @@ regress them. Each assertion names the failure mode it guards against."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from mysql2parquet_spark.queries import REGISTRY, _load
@@ -69,8 +71,27 @@ def test_agg_partial_combine(spark, sf_dir):
 
 def test_agg_shares_duplicate_aggregates(spark, sf_dir):
     p = plan(spark, sf_dir, "agg_group")
-    # sum(l_quantity) feeds both sum_qty and avg_qty: must aggregate once
-    assert p.count("partial_sum(cast(l_quantity") == 1
+    # sum(l_quantity) feeds both sum_qty and avg_qty: must aggregate once,
+    # as the three limb sums of its cents column (_q)
+    assert len(re.findall(r"partial_sum\([^)]*\b_q#", p)) == 3, p
+
+
+def test_tpch_q1_partial_aggregate_keeps_bigint_buffers(spark, sf_dir):
+    """Q1's money sums run on the fixed-point kernel: the map-side
+    aggregate holds only BIGINT buffers (limb sums and the count). A
+    DECIMAL sum buffer here means a BigDecimal add per row, and its
+    input a Double->BigDecimal cast per value."""
+    p = plan(spark, sf_dir, "tpch_q1")
+    partial = [
+        sec for sec in p.split("\n\n")
+        if ") HashAggregate" in sec and "partial_sum" in sec
+    ]
+    assert len(partial) == 1, p
+    attrs = re.search(r"Aggregate Attributes \[\d+\]: \[(.*)\]", partial[0])
+    assert attrs, partial[0]
+    buffers = attrs.group(1).split(", ")
+    assert len(buffers) == 16, buffers  # 5 sums x 3 limbs + count
+    assert all(re.fullmatch(r"(sum|count)#\d+L", b) for b in buffers), buffers
 
 
 def test_scans_stay_codegen(spark, sf_dir):
